@@ -6,7 +6,7 @@ full-width scan (the round-1 zorder anomaly: the workaround persist()
 built full token-array rows at low parallelism). Instead we:
 
 1. compute boundaries ourselves from a *narrow* sample (caller's job),
-2. assign each row a bin id with a codegen'd literal-array expression,
+2. assign each row a bin id with a codegen'd binary-search CASE tree,
 3. route bin -> exact Spark partition by mapping every bin id to a salt
    value whose murmur3 hash lands on that partition, then a plain
    ``repartition(n, salt)``.
@@ -61,31 +61,54 @@ def salts_for_bins(n_bins: int) -> list[int]:
     return salts  # type: ignore[return-value]
 
 
-def _bin_tree_sql(key_name: str, vals: list[int]) -> str:
-    """The nested-when binary-search tree of ``bin_expr`` as ONE
-    generated SQL string for INTEGER boundaries: the Column-object
-    recursion costs ~0.25 s of py4j round trips per ~100 boundaries
-    (paid by every cluster rewrite); parsing the equivalent CASE text
-    is milliseconds. Integer literals embed verbatim — no escaping
-    hazards, which is why the string-boundary path keeps the Column
-    form."""
+def _sql_literal(v: int | str) -> str:
+    """SQL text for one boundary: integers verbatim, strings single-quoted
+    with ``\\`` and ``'`` backslash-escaped (the parser's default string
+    unescaping reverses exactly these two). Every other character — tab,
+    control bytes, non-ASCII — passes through as itself."""
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return str(int(v))
+
+
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_in_list(col_name: str, values) -> Column:
+    """``col_name IN (values...)`` as one parsed SQL expression (Spark
+    plans a long IN list as a hash-set probe). NULL values are skipped —
+    they never match — and an empty list is the constant false."""
+    lits = [_sql_literal(v) for v in values if v is not None]
+    if not lits:
+        return F.lit(False)
+    return F.expr(f"{_sql_ident(col_name)} IN ({', '.join(lits)})")
+
+
+def _bin_tree_sql(key_name: str, vals: list) -> str:
+    """The nested-when binary-search tree of ``bin_expr`` as ONE generated
+    SQL string: building it from Column objects costs ~2 py4j round trips
+    per boundary (~0.25 s per ~100, paid by every rewrite that routes by
+    range); parsing the equivalent CASE text is milliseconds."""
+    col = _sql_ident(key_name)
+    lits = [_sql_literal(v) for v in vals]
 
     def tree(lo: int, hi: int) -> str:
         if lo == hi:
             return str(lo)
         mid = (lo + hi) // 2
         return (
-            f"(CASE WHEN `{key_name}` < {vals[mid]} "
+            f"(CASE WHEN {col} < {lits[mid]} "
             f"THEN {tree(lo, mid)} ELSE {tree(mid + 1, hi)} END)"
         )
 
     return tree(0, len(vals))
 
 
-def bin_expr(key: Column, boundaries: list) -> Column:
-    """Bin id in [0, len(boundaries)] = count of boundaries <= key,
-    as a NESTED-when binary-search tree: O(log #boundaries) codegen'd
-    JVM comparisons per row, no Python stage.
+def bin_expr(key_name: str, boundaries: list) -> Column:
+    """Bin id in [0, len(boundaries)] = count of boundaries <= the value of
+    column ``key_name``, as a NESTED-when binary-search tree: O(log
+    #boundaries) codegen'd JVM comparisons per row, no Python stage.
 
     Why not simpler forms (measured, 300k rows x 95 string boundaries):
     a literal-array ``F.filter`` runs the lambda INTERPRETED per element
@@ -95,21 +118,20 @@ def bin_expr(key: Column, boundaries: list) -> Column:
     tree (~1 s) stays in whole-stage codegen — each row walks one
     root-to-leaf path of ~7 comparisons. Works for int curve keys and
     lexicographic string keys alike (Spark string comparison is binary
-    UTF-8 order, matching the driver-side Python sort of the boundary
-    sample for ASCII keys).
+    UTF-8 order, which is code-point order — the order of the driver-side
+    Python sort of the boundaries).
     """
-    vals = [b if isinstance(b, str) else int(b) for b in boundaries]
+    return F.expr(_bin_tree_sql(key_name, boundaries))
 
-    def _tree(lo: int, hi: int) -> Column:
-        # bin id for keys known to land in [lo, hi]
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(key < F.lit(vals[mid]), _tree(lo, mid)).otherwise(
-            _tree(mid + 1, hi)
-        )
 
-    return _tree(0, len(vals))
+def _free_name(df: DataFrame, base: str) -> str:
+    """``base`` prefixed with underscores until no column of ``df`` has
+    that name (case-insensitively, as the analyzer resolves names)."""
+    taken = {c.lower() for c in df.columns}
+    name = base
+    while name.lower() in taken:
+        name = "_" + name
+    return name
 
 
 KEY_SEP = "\t"  # sorts below printable ASCII: concat order == tuple order
@@ -199,21 +221,17 @@ def exact_range_partition(
     if n_bins == 1:
         return df.repartition(1).sortWithinPartitions(*sort_cols)
     salts = salts_for_bins(n_bins)
-    if boundaries and all(not isinstance(b, str) for b in boundaries):
-        # integer boundaries (curve keys): stage the key once and parse
-        # the whole binary-search tree from generated SQL — identical
-        # expression, a fraction of the py4j build cost (_bin_tree_sql)
-        kn = "_bin_key"
-        binned = df.withColumn(kn, key).withColumn(
-            BIN, F.expr(_bin_tree_sql(kn, [int(b) for b in boundaries]))
-        ).drop(kn)
-    else:
-        binned = df.withColumn(BIN, bin_expr(key, boundaries))
-    out = (
-        binned
-        .withColumn(_SALT, F.element_at(F.lit(salts), F.col(BIN) + 1))
-        .repartition(n_bins, F.col(_SALT))
+    # helper columns take names the input does not use, so an input
+    # column called _bin/_bin_key/_bin_salt passes through untouched. The
+    # key is staged once (the bin tree compares it at every level) and
+    # only the salt crosses the shuffle.
+    kn, bn, sn = (_free_name(df, c) for c in ("_bin_key", BIN, _SALT))
+    return (
+        df.withColumn(kn, key)
+        .withColumn(bn, bin_expr(kn, boundaries))
+        .withColumn(sn, F.element_at(F.lit(salts), F.col(bn) + 1))
+        .drop(kn, bn)
+        .repartition(n_bins, F.col(sn))
         .sortWithinPartitions(*sort_cols)
-        .drop(BIN, _SALT)
+        .drop(sn)
     )
-    return out

@@ -12,25 +12,38 @@ copy-on-write MERGE:
     WHEN NOT MATCHED (and not a delete) THEN INSERT
 
 Physical plan, designed for 100 TB:
+0. *batch keys* — the deduplicated batch is cached; for a driver-planned
+   snapshot ONE bounded collect of its (doc_id, _olake_id, delete flag)
+   rows, capped at ``exact_prune_max_keys`` + 1, yields the change
+   count, the delete count, the sorted doc_id list used by step 1 and by
+   the commit's conflict validation, and the flagged keys used by
+   step 2. A batch over the cap (or a many-shard snapshot) is counted by
+   an aggregate and never held on the driver;
 1. *candidate pruning* — manifest doc_id min/max vs. the change batch's
    keys selects candidate files EXACTLY at any batch size: driver-side
-   bisect for small batches, a distributed bucketized interval join of
-   manifest ranges vs keys above that (the analog of Iceberg's manifest
-   filtering);
-2. *touched-file discovery* — one scan of candidates joined (broadcast
-   when small) with the flagged change keys on ``_olake_id`` over
-   ``input_file_name()`` finds files that actually contain a matched
-   key AND yields the matched/deleted row counts in the same job;
-   untouched candidates carry over to the new snapshot unchanged;
+   bisect of the collected key list for small batches, a distributed
+   bucketized interval join of manifest ranges vs keys above that (the
+   analog of Iceberg's manifest filtering);
+2. *touched-file discovery* — one scan of candidates, filtered on the
+   batch's ``_olake_id`` keys and carrying each row's source path, finds
+   files that actually contain a matched key AND yields the
+   matched/deleted row counts in the same job. A small batch (at most
+   ``_INLINE_KEYS_MAX`` keys) filters on an inlined IN list of the keys
+   collected in step 0, and the matched (key, file) rows — bounded by the
+   batch size — are counted on the driver: no broadcast job, no
+   aggregation exchange. A larger batch joins (broadcast when small) the
+   flagged keys and aggregates per file in the cluster. Untouched
+   candidates carry over to the new snapshot unchanged;
 3. *rewrite* — touched rows anti-joined against matched keys, unioned
    with upserted change rows, written doc_id-clustered.
 
-Only step 2–3 read data, and only the touched files are rewritten.
+Only step 2–3 read table data, and only the touched files are rewritten.
 """
 
 from __future__ import annotations
 
 import math
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -43,6 +56,7 @@ from olake_spark.functions.partitioning import (
     composite_key_expr,
     exact_range_partition,
     sample_file_boundaries,
+    sql_in_list,
     string_key_cols,
 )
 from olake_spark.operators.compaction import DEFAULT_TARGET_FILE_BYTES
@@ -71,6 +85,28 @@ from olake_spark.table.format import (
 # shared with the MoR delete anti-joins in table/format.py; above it we
 # drop the hint and let AQE choose the join strategy from runtime stats.
 BROADCAST_KEY_BYTES = 72
+
+# A driver-collected change batch of at most this many keys filters the
+# discovery scan through an inlined IN list instead of a broadcast join:
+# no broadcast job, but planning cost grows with the list (on 4 cores
+# the two cost the same near 2k keys, measured over a 20k-row scan).
+_INLINE_KEYS_MAX = 1024
+
+
+class _PhaseTimer:
+    """Wall seconds per merge phase: ``mark(name)`` records the time since
+    the previous mark (or since construction) under ``name``. ``seconds``
+    is what ``MergeResult.details['phase_seconds']`` reports."""
+
+    def __init__(self) -> None:
+        self.seconds: dict[str, float] = {}
+        self._t0 = time.perf_counter()
+
+    def mark(self, name: str) -> None:
+        now = time.perf_counter()
+        self.seconds[name] = round(now - self._t0, 3)
+        self._t0 = now
+
 
 def stats_overlap(sorted_keys: list, stats: dict | None) -> bool:
     """May a file whose column stats are ``stats`` ({'min':..,'max':..})
@@ -164,13 +200,6 @@ def _candidate_paths_distributed(
         }
     )
 
-    def _bin(col):
-        # nested-when binary search (bin_expr): the literal-array HOF
-        # filter is interpreted per element — at 1024 boundaries x a
-        # multi-million-key batch that is billions of interpreted
-        # comparisons
-        return bin_expr(col, bnds)
-
     # manifest min/max carry the key column's native type (int for a
     # bigint doc_id) — the bounds schema must match the keys' type, not
     # assume string
@@ -178,9 +207,9 @@ def _candidate_paths_distributed(
         bounded, f"path string, lo {key_type}, hi {key_type}"
     )
     fb = fdf.withColumn(
-        "b", F.explode(F.sequence(_bin(F.col("lo")), _bin(F.col("hi"))))
+        "b", F.explode(F.sequence(bin_expr("lo", bnds), bin_expr("hi", bnds)))
     )
-    kb = keys_df.withColumn("b", _bin(F.col("doc_id")))
+    kb = keys_df.withColumn("b", bin_expr("doc_id", bnds))
     hits = (
         fb.join(kb, "b")
         .filter(F.col("doc_id").between(F.col("lo"), F.col("hi")))
@@ -409,19 +438,10 @@ def _merge_apply_mor(
     (format.new_delete_entries_since). Commit retries on version-bump
     conflicts only — the written files are immutable and re-commit as-is.
     """
-    import time
-
     from olake_spark.plans.retry import retry_on_backoff
     from olake_spark.table.format import CONTENT_EQ_DELETES, CommitConflict
 
-    phase_t: dict[str, float] = {}
-    t0 = time.time()
-
-    def _mark(name: str) -> None:
-        nonlocal t0
-        phase_t[name] = round(time.time() - t0, 3)
-        t0 = time.time()
-
+    timer = _PhaseTimer()
     table.refresh()
     schema = table.schema()
     out_cols = [f.name for f in schema.fields]
@@ -432,7 +452,7 @@ def _merge_apply_mor(
     ).first()
     n_changes = stats.n or 0
     n_deletes_total = stats.n_del or 0
-    _mark("prepare_s")
+    timer.mark("prepare_s")
     if n_changes == 0:
         return MergeResult(snapshot_id=None)
 
@@ -470,7 +490,7 @@ def _merge_apply_mor(
                 n_bins, F.col("source"), F.col("doc_id")
             ).sortWithinPartitions("source", "doc_id")
         )
-    _mark("write_s")
+    timer.mark("write_s")
 
     def attempt() -> int:
         table.refresh()
@@ -488,7 +508,7 @@ def _merge_apply_mor(
     new_snap = retry_on_backoff(
         attempt, attempts=4, base_sleep_s=0.2, retry_on=(CommitConflict,)
     )
-    _mark("commit_s")
+    timer.mark("commit_s")
     return MergeResult(
         snapshot_id=new_snap,
         inserted=n_upserts,
@@ -496,7 +516,7 @@ def _merge_apply_mor(
         details={
             "mode": "mor",
             "delete_files": len(del_files),
-            "phase_seconds": phase_t,
+            "phase_seconds": timer.seconds,
             # matched/updated counts are unknowable without a read —
             # the whole point of MoR; 'inserted' here means 'upserted'
         },
@@ -548,11 +568,11 @@ def _candidates_from_manifests_distributed(
                 "b",
                 F.explode(
                     F.sequence(
-                        bin_expr(F.col("_lo"), bnds), bin_expr(F.col("_hi"), bnds)
+                        bin_expr("_lo", bnds), bin_expr("_hi", bnds)
                     )
                 ),
             )
-            kb = keys_df.withColumn("b", bin_expr(F.col("doc_id"), bnds))
+            kb = keys_df.withColumn("b", bin_expr("doc_id", bnds))
             hit_paths = (
                 fb.join(kb, "b")
                 .filter(F.col("doc_id").between(F.col("_lo"), F.col("_hi")))
@@ -602,61 +622,72 @@ def _merge_apply(
     exact_prune_max_keys: int,
     distributed_planning: bool | None = None,
 ) -> MergeResult:
-    import time
-
-    phase_t: dict[str, float] = {}
-    t0 = time.time()
-
-    def _mark(name: str) -> None:
-        nonlocal t0
-        phase_t[name] = round(time.time() - t0, 3)
-        t0 = time.time()
-
+    timer = _PhaseTimer()
     table.refresh()
     snap = table.snapshot()
     schema = table.schema()
     out_cols = [f.name for f in schema.fields]
+    is_del = F.col(CDC_DELETED_AT).isNotNull()
 
-    stats = ch.agg(
-        F.count("*").alias("n"),
-        F.sum(F.col(CDC_DELETED_AT).isNotNull().cast("int")).alias("n_del"),
-    ).first()
-    n_changes = stats.n or 0
-    n_deletes_total = stats.n_del or 0
-    _mark("prepare_s")
-    if n_changes == 0:
-        return MergeResult(snapshot_id=None)
-
-    # --- 1. candidate files via manifest doc_id pruning — EXACT at any
-    # batch size. Small batches: driver-side bisect of each file's
-    # [min,max] window against the sorted key set (collects <=
-    # exact_prune_max_keys doc_ids, ~10 MB at the default). Larger
-    # batches: distributed bucketized interval join of manifest ranges vs
-    # change keys (no global-bounds fallback, which on a hash-distributed
-    # doc_id space would select ~every file). On MANY-SHARD tables the
-    # whole discovery goes through manifest_entries_df so the driver
-    # never parses O(table) manifest JSON or materializes the file list
-    # — only surviving candidates are collected.
+    # On MANY-SHARD tables the whole discovery goes through
+    # manifest_entries_df so the driver never parses O(table) manifest
+    # JSON or materializes the file list — only surviving candidates are
+    # collected. Every other snapshot is planned on the driver.
     use_dist = distributed_planning
     if use_dist is None:
         use_dist = (
             snap is not None
             and len(snap.manifests) >= _DISTRIBUTED_PLANNING_MIN_SHARDS
         )
+    driver_planned = not (use_dist and snap is not None)
+
+    # --- 0. batch size, delete count and (small batches) the key lists.
+    # Driver-planned batches of <= exact_prune_max_keys rows take all of
+    # them from ONE bounded collect of (doc_id, _olake_id, delete flag) —
+    # ~20 MB of driver rows at the default bound. The sorted doc_ids drive the exact
+    # bisect prune below and commit_merge's conflict validation; the
+    # flagged _olake_ids drive discovery. A batch that overflows the bound
+    # is counted by an aggregate instead and pruned by the distributed
+    # interval join.
     change_ids: list | None = None
-    if use_dist and snap is not None:
+    key_rows = (
+        ch.select("doc_id", OLAKE_ID, is_del.alias("_isdel"))
+        .limit(max(exact_prune_max_keys, 0) + 1)
+        .collect()
+        if driver_planned
+        else None
+    )
+    if key_rows is not None and len(key_rows) <= exact_prune_max_keys:
+        n_changes = len(key_rows)
+        n_deletes_total = sum(r._isdel for r in key_rows)
+        change_ids = sorted({r.doc_id for r in key_rows})
+    else:
+        stats = ch.agg(
+            F.count("*").alias("n"),
+            F.sum(is_del.cast("int")).alias("n_del"),
+        ).first()
+        n_changes = stats.n or 0
+        n_deletes_total = stats.n_del or 0
+    timer.mark("prepare_s")
+    if n_changes == 0:
+        return MergeResult(snapshot_id=None)
+
+    # --- 1. candidate files via manifest doc_id pruning — EXACT at any
+    # batch size: driver-side bisect of each file's [min,max] window
+    # against the sorted key list when it was collected, else a
+    # distributed bucketized interval join of manifest ranges vs change
+    # keys (no global-bounds fallback, which on a hash-distributed doc_id
+    # space would select ~every file).
+    if not driver_planned:
         candidates = _candidates_from_manifests_distributed(
             table, snap, ch, n_changes
         )
     else:
         files = table.files(snap.snapshot_id) if snap else []
-        if n_changes <= exact_prune_max_keys:
-            ids = sorted(
-                r.doc_id for r in ch.select("doc_id").distinct().collect()
-            )
-            change_ids = ids
+        if change_ids is not None:
             candidates = [
-                f for f in files if stats_overlap(ids, f.stats.get("doc_id"))
+                f for f in files
+                if stats_overlap(change_ids, f.stats.get("doc_id"))
             ]
         elif files:
             hit_paths = _candidate_paths_distributed(
@@ -666,18 +697,21 @@ def _merge_apply(
         else:
             candidates = list(files)
 
-    _mark("prune_s")
+    timer.mark("prune_s")
     keys = ch.select(OLAKE_ID)
     keys_b = _keys_for_join(keys, n_changes)
 
     # --- 2. which candidates actually contain a matched key — and how
     # many rows match, split by delete flag? ONE job over the candidate
-    # scan answers both (it used to be a semi-join discovery pass plus a
-    # second matched-stats scan of the touched files): inner-join the
-    # pruned olake_id column with the flagged change keys, aggregate per
-    # file. With duplicate target keys the counts are affected *target
-    # rows* (standard MERGE semantics); on the unique-key tables this
-    # engine maintains, that equals the matched change-key count.
+    # scan answers both. With duplicate target keys the counts are
+    # affected *target rows* (standard MERGE semantics); on the
+    # unique-key tables this engine maintains, that equals the matched
+    # change-key count. A batch of at most _INLINE_KEYS_MAX keys, already
+    # collected in step 0, matches ~batch-size rows: the scan filters on
+    # an inlined IN list of its keys (a hash-set probe, no broadcast job)
+    # and the driver counts the collected (key, file) hits with the
+    # collected delete flags — no aggregation exchange. A larger batch
+    # joins the flagged keys and aggregates per file in the cluster.
     touched_paths: set[str] = set()
     n_matched = n_deletes_matched = 0
     if candidates:
@@ -686,23 +720,26 @@ def _merge_apply(
         # the multi-source plan a delete-applying scan produces
         cand_df = table.scan(
             snapshot_id=snap.snapshot_id, files=candidates, with_position=True
-        )
-        flags = ch.select(
-            OLAKE_ID,
-            F.col(CDC_DELETED_AT).isNotNull().cast("int").alias("_isdel"),
-        )
-        per_file = (
-            cand_df.select(OLAKE_ID, "_file")
-            .join(_keys_for_join(flags, n_changes), OLAKE_ID)
-            .groupBy("_file")
-            .agg(F.count("*").alias("_n"), F.sum("_isdel").alias("_nd"))
-            .collect()
-        )
-        for r in per_file:
-            touched_paths.add(r._file)
-            n_matched += r._n
-            n_deletes_matched += r._nd or 0
-    _mark("discover_s")
+        ).select(OLAKE_ID, "_file")
+        if change_ids is not None and n_changes <= _INLINE_KEYS_MAX:
+            is_del_of = {r[OLAKE_ID]: r._isdel for r in key_rows}
+            for r in cand_df.filter(sql_in_list(OLAKE_ID, is_del_of)).collect():
+                touched_paths.add(r._file)
+                n_matched += 1
+                n_deletes_matched += is_del_of[r[OLAKE_ID]]
+        else:
+            flags = ch.select(OLAKE_ID, is_del.cast("int").alias("_isdel"))
+            per_file = (
+                cand_df.join(_keys_for_join(flags, n_changes), OLAKE_ID)
+                .groupBy("_file")
+                .agg(F.count("*").alias("_n"), F.sum("_isdel").alias("_nd"))
+                .collect()
+            )
+            for r in per_file:
+                touched_paths.add(r._file)
+                n_matched += r._n
+                n_deletes_matched += r._nd or 0
+    timer.mark("discover_s")
     touched = [f for f in candidates if f.path in touched_paths]
     # on the exact-partition path the rewrite's anti-join is the single
     # consumer — stream from parquet, no persist (the fallback branch
@@ -812,7 +849,7 @@ def _merge_apply(
     outputs = table.write_data_files(out_df)
     if fallback_persisted is not None:
         fallback_persisted.unpersist()
-    _mark("write_s")
+    timer.mark("write_s")
     new_snap = commit_merge(
         table,
         snap.snapshot_id if snap else None,
@@ -826,7 +863,7 @@ def _merge_apply(
             "deleted": n_deletes_matched,
         },
     )
-    _mark("commit_s")
+    timer.mark("commit_s")
     return MergeResult(
         snapshot_id=new_snap,
         candidate_files=len(candidates),
@@ -834,5 +871,5 @@ def _merge_apply(
         inserted=n_inserts,
         updated=n_updates,
         deleted=n_deletes_matched,
-        details={"phase_seconds": phase_t},
+        details={"phase_seconds": timer.seconds},
     )

@@ -355,6 +355,149 @@ def test_merge_is_noop_for_unknown_deletes(spark, small_table):
     assert t.scan().count() == n0
 
 
+def _small_cdc_batch(spark, seq_df):
+    """Upserts, deletes, two new keys and one key sent twice (``seq``
+    orders the repeats: the later upsert wins), on two of four doc_id
+    ranges. Cached, like a CDC consumer's batch."""
+    ids = [r.doc_id for r in seq_df.select("doc_id").orderBy("doc_id").collect()]
+    upd, dele, twice = ids[:8], ids[1100:1104], ids[10]
+    base = seq_df.select(*DATA_COLUMNS)
+    no_del = F.lit(None).cast("timestamp")
+    rows = (
+        base.filter(F.col("doc_id").isin(upd))
+        .withColumn("n_tok", F.lit(3))
+        .withColumn(CDC_DELETED_AT, no_del)
+        .withColumn("seq", F.lit(0))
+        .unionByName(
+            base.filter(F.col("doc_id").isin(dele))
+            .withColumn(CDC_DELETED_AT, F.current_timestamp())
+            .withColumn("seq", F.lit(0))
+        )
+        .unionByName(
+            spark.createDataFrame(
+                [("zz-new-1", [1, 2], 2, "web", None, 0),
+                 ("zz-new-2", [3], 1, "books", None, 0),
+                 (twice, [7], 1, "web", None, 0),
+                 (twice, [8, 9], 2, "web", None, 1)],
+                "doc_id string, tokens array<int>, n_tok int, source string, "
+                f"{CDC_DELETED_AT} timestamp, seq int",
+            )
+        )
+    )
+    return rows.cache(), upd, dele, twice
+
+
+def _checksum(df):
+    r = df.select(
+        F.sum(F.xxhash64(*DATA_COLUMNS).cast("decimal(38,0)")), F.count("*")
+    ).first()
+    return tuple(r)
+
+
+def _merge_counts(res):
+    return (res.inserted, res.updated, res.deleted,
+            res.candidate_files, res.touched_files)
+
+
+def test_small_cow_merge_job_budget(spark, tmp_path, seq_df):
+    """A driver-planned CoW batch runs in at most 8 Spark jobs: one
+    bounded key collect gives the counts, the prune keys and the
+    validation keys, and discovery counts matched rows on the driver."""
+    t = Table.create(spark, str(tmp_path / "tbl"))
+    t.append(seq_df.repartitionByRange(4, "doc_id"))
+    assert len(t.files()) == 4
+    changes, upd, dele, twice = _small_cdc_batch(spark, seq_df)
+    changes.count()
+    sc = spark.sparkContext
+    group = f"merge-budget-{id(t)}"
+    sc.setJobGroup(group, "small CoW merge")
+    try:
+        res = merge_into(t, changes, dedup_order_col="seq")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        changes.unpersist()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 8, n_jobs
+    assert (res.inserted, res.updated, res.deleted) == (2, len(upd) + 1, len(dele))
+    assert res.touched_files <= res.candidate_files < 4
+    cur = t.scan()
+    assert cur.count() == N_ROWS - len(dele) + 2
+    assert cur.filter(F.col("doc_id") == twice).first().tokens == [8, 9]
+    assert set(res.details["phase_seconds"]) == {
+        "prepare_s", "prune_s", "discover_s", "write_s", "commit_s"
+    }
+
+
+def test_small_cow_merge_matches_distributed_prune(
+    spark, tmp_path, seq_df, monkeypatch
+):
+    """The small-batch path (driver prune, inlined key filter), driver
+    prune with the aggregating discovery (batch above _INLINE_KEYS_MAX)
+    and the distributed prune (exact_prune_max_keys=1) apply the same
+    batch to copies of one table with identical results, counts and file
+    selection."""
+    import shutil
+
+    import olake_spark.operators.merge as m
+
+    src = Table.create(spark, str(tmp_path / "a"))
+    src.append(seq_df.repartitionByRange(4, "doc_id"))
+    for name in ("b", "c"):
+        shutil.copytree(src.root, str(tmp_path / name))
+    changes, *_ = _small_cdc_batch(spark, seq_df)
+    out = {}
+    for name, max_keys, inline_max in (
+        ("a", 100_000, m._INLINE_KEYS_MAX), ("b", 100_000, 0), ("c", 1, 0),
+    ):
+        monkeypatch.setattr(m, "_INLINE_KEYS_MAX", inline_max)
+        t = Table.load(spark, str(tmp_path / name))
+        res = merge_into(
+            t, changes, dedup_order_col="seq", exact_prune_max_keys=max_keys
+        )
+        out[name] = (_merge_counts(res), _checksum(t.scan()))
+    changes.unpersist()
+    assert out["a"] == out["b"] == out["c"]
+    assert out["a"][0][3] < 4  # pruning selected a strict subset
+
+
+# ---------------------------------------------------------------- partitioning
+def test_bin_expr_string_boundaries_match_bisect(spark):
+    """The SQL-text bin tree quotes string boundaries exactly: bin ids
+    equal Python's bisect_right for quotes, backslashes, tabs, control
+    bytes and non-ASCII text."""
+    import bisect
+
+    from olake_spark.functions.partitioning import bin_expr
+
+    bnds = sorted(["a'b", "a\\b", "a\tb", "é", "日本", "it's\\", "m", "\\'",
+                   "\x01x"])
+    keys = bnds + ["", "a", "a'", "a'c", "a\\", "a\\c", "a\t", "z", "é'x",
+                   "日本語", "\\", "'", "\x00", "\x01", "~", "it's", "\\''"]
+    got = dict(
+        spark.createDataFrame([(k,) for k in keys], "k string")
+        .select("k", bin_expr("k", bnds).alias("b"))
+        .collect()
+    )
+    assert got == {k: bisect.bisect_right(bnds, k) for k in keys}
+
+
+def test_exact_range_partition_keeps_input_helper_named_columns(spark):
+    """An input column that shares a helper's name (_bin_key, _bin)
+    passes through exact_range_partition with its values intact."""
+    from olake_spark.functions.partitioning import exact_range_partition
+
+    df = spark.range(200).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 3).alias("_bin_key"),
+        F.lit("keep").alias("_bin"),
+    )
+    out = exact_range_partition(df, F.col("k"), [50, 100, 150], ["k"])
+    assert out.columns == ["k", "_bin_key", "_bin"]
+    rows = out.collect()
+    assert len(rows) == 200
+    assert all(r._bin_key == 3 * r.k and r._bin == "keep" for r in rows)
+
+
 # ---------------------------------------------------------------------- expire
 def test_expire_and_orphan_cleanup(spark, small_table, seq_df):
     t = small_table
